@@ -29,7 +29,7 @@ from __future__ import annotations
 
 import warnings
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types
 
@@ -301,13 +301,12 @@ def minhash_lsh_candidates(
     # shuffle execute once PER consumer (measured 3 parquet scans and
     # zero ReusedExchange at sf0.1). The pinned frame is bucket-scale
     # (one row per non-singleton (band, bucket)), tiny next to the
-    # corpus that built it. LAZY pin (eager=False, round-8 ADVICE):
-    # the RDD is marked persistent at construction, so the first
-    # action computes it once and all three consumers read the cached
-    # blocks — same dedup as eager — but plan-only callers (the plan
-    # guards) no longer execute the aggregation job just to build the
-    # DataFrame, and no lineage-truncated blocks exist until a caller
-    # actually runs the query.
+    # corpus that built it. eager=False is NOT lazy here: under AQE,
+    # building the checkpoint RDD plans the adaptive query, which runs
+    # every shuffle-map stage below the pin (the corpus scan, the
+    # signatures and the collect_set exchange) at build time — one
+    # build job at this site (measured at sf0.01). Only the
+    # final aggregate stage waits for the first action.
     grouped = (
         banded.groupBy("band", "bucket")
         .agg(ids.alias("ids"))
@@ -347,34 +346,71 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """(id_a, id_b, jaccard) for pairs with n-gram Jaccard >= threshold.
     Without `candidates`, pairs come from the inverted shingle index
-    (docs sharing >= 1 shingle) — never a blind cross join. With
-    `candidates` (e.g. from MinHash-LSH) this is the exact verify stage."""
-    sh = word_shingles(df, id_col, text_col, n)
-    sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count("*").alias("inter"))
-    )
+    (docs sharing >= 1 shingle) — never a blind cross join.
+
+    With `candidates` (e.g. from MinHash-LSH) this is the exact verify
+    stage, and it touches candidate pairs only: each side's distinct
+    shingle set is joined onto the pair and the intersection is sized
+    row-locally (`size(array_intersect)`), so the shingle self-join —
+    all-pairs work that LSH exists to avoid — never runs. The rows are
+    those of the index path restricted to the candidates: pairs with
+    id_a < id_b that share >= 1 shingle, one row per pair. A doc id
+    that occurs on several rows unions their shingle sets, as the
+    index path's distinct (id, shingle) frame does."""
     if candidates is not None:
-        inter = inter.join(candidates, ["id_a", "id_b"], "left_semi")
-    sa = sizes.select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b"))
-    return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.col("inter")
-                / (F.col("sz_a") + F.col("sz_b") - F.col("inter"))
-            ).alias("jaccard"),
+        sets = (
+            df.select(F.col(id_col).alias("id"), _shingle_array(text_col, n).alias("sh"))
+            .groupBy("id")
+            .agg(F.array_distinct(F.flatten(F.collect_list("sh"))).alias("sh"))
         )
-        .filter(F.col("jaccard") >= threshold)
-    )
+        sa = sets.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
+        sb = sets.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
+        pairs = (
+            candidates.select("id_a", "id_b")
+            .filter(F.col("id_a") < F.col("id_b"))
+            .distinct()
+            .join(sa, "id_a")
+            .join(sb, "id_b")
+            # sized inside a one-row generator: filters are not pushed
+            # below generator output, so array_intersect runs once per
+            # pair — as a plain projection the optimizer inlines it into
+            # every pushed-down filter (4 evaluations per pair, +50% exec
+            # time on dedup_minhash_calibration's 29k pairs at sf0.01)
+            .select(
+                "id_a",
+                "id_b",
+                F.inline(
+                    F.array(
+                        F.struct(
+                            F.size(F.array_intersect("sh_a", "sh_b")).alias("inter"),
+                            F.size("sh_a").alias("sz_a"),
+                            F.size("sh_b").alias("sz_b"),
+                        )
+                    )
+                ),
+            )
+            .filter(F.col("inter") > 0)
+        )
+    else:
+        sh = word_shingles(df, id_col, text_col, n)
+        sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
+        a = sh.alias("a")
+        b = sh.alias("b")
+        inter = (
+            a.join(
+                b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id"))
+            )
+            .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+            .agg(F.count("*").alias("inter"))
+        )
+        sa = sizes.select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a"))
+        sb = sizes.select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b"))
+        pairs = inter.join(sa, "id_a").join(sb, "id_b")
+    return pairs.select(
+        "id_a",
+        "id_b",
+        (F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter"))).alias("jaccard"),
+    ).filter(F.col("jaccard") >= threshold)
 
 
 def simhash(
@@ -432,15 +468,16 @@ def connected_components(
     exhausted first, a warning is logged and the (possibly split) labels
     are returned — raise max_iter for graphs of diameter > max_iter.
 
-    Per-iteration shape (r14 opt round): ONE join + ONE aggregate. The
-    doubled edge set carries a SELF-LOOP per node, so the neighbor-min
-    aggregate folds the node's own label in for free, and the old
-    left-join of labels against the neighbor mins disappears; the
-    convergence probe rides the same aggregate (old label = the
-    self-loop's contribution, `min(when(t == s))`), replacing the
-    pre-r14 third join (new labels against old labels) with a map-only
-    filter over the already-pinned frame. 3 joins/round -> 1. The
-    labels side of the surviving join is SHUFFLE_HASH-hinted: both
+    Round shape: the caller's edges are pinned ONCE, then each round
+    pins ONE label frame. Round 1 is a bare `groupBy(s)` of `least(s, min(t))` over the
+    doubled edges — every label starts as its own id, so it needs no
+    label frame and no join. Later rounds are ONE join + ONE aggregate:
+    the doubled edge set carries a SELF-LOOP per node, so the
+    neighbor-min aggregate folds the node's own label in for free, and
+    the old label is the self-loop's contribution (`min(when(t == s))`).
+    The count of labels that moved is a `df.observe` metric on the
+    round's pin, so the convergence probe runs no job of its own.
+    The labels side of the surviving join is SHUFFLE_HASH-hinted: both
     sides are pinned ExistingRDD scans with no stats, so the static
     planner would otherwise SortMergeJoin every round (two sorts of
     the edge set per iteration) and AQE never revisits pinned
@@ -468,11 +505,6 @@ def connected_components(
             return df.checkpoint(eager=True)
         return df.localCheckpoint(eager=True)
 
-    # materialize the doubled edge set ONCE: it is joined every round,
-    # and the caller's edge lineage (LSH candidates -> Jaccard verify ->
-    # shingle scans) would otherwise re-execute per iteration x per
-    # action — measured 8.5 s for a 193-edge graph at sf0.1, ~1 s with
-    # the pin (the edge frame is tiny next to the corpus that built it)
     # numeric ids normalize to long (doc_id ints of any width unify);
     # non-numeric ids (entity-resolution NAME nodes) keep their native
     # type — min-label propagation only needs a total order, which
@@ -494,59 +526,68 @@ def connected_components(
             return F.col(c).cast("long")
         return F.col(c).cast("string") if to_string else F.col(c)
 
-    # the doubled edge set is pinned FIRST and everything else derives
-    # from the pinned blocks: the caller's edge lineage (LSH candidates
-    # -> Jaccard verify -> shingle scans) executes exactly twice (the
-    # two union branches), as pre-r14 — deriving nodes/self-loops from
-    # an UNPINNED doubled frame re-executed it four times (measured 2x
-    # wall-clock on corpus_full_curation before this pin was hoisted)
-    doubled = _truncate(
-        edges.select(_id(src).alias("s"), _id(dst).alias("t"))
-        .union(edges.select(_id(dst).alias("s"), _id(src).alias("t")))
-        .distinct()
-    )
-    labels = _truncate(
-        doubled.select("s")
-        .distinct()
-        .select(F.col("s").alias("id"), F.col("s").alias("label"))
-    )
-    # self-loops: each node's own label reaches the neighbor-min
-    # aggregate through the same join — no separate labels left-join.
-    # The self-loop side is the PINNED initial label frame (the node
-    # set), so `bi` itself stays unpinned: every iteration reads it as
-    # a map-side union of two pinned block sets — no shuffle, no
-    # re-derivation, and no dedup needed (a duplicate self-loop from a
-    # (x, x) input edge only feeds the same value to min() twice)
-    init = labels
-    bi = doubled.union(
-        init.select(F.col("id").alias("s"), F.col("id").alias("t"))
-    )
-    converged = False
-    for _ in range(max_iter):
+    # the caller's (s, t) edge frame is pinned ONCE: it is read every
+    # round, and the caller's edge lineage (LSH candidates -> Jaccard
+    # verify -> shingle scans) would otherwise re-execute per round
+    # (measured 8.5 s for a 193-edge graph at sf0.1, ~1 s pinned).
+    # Everything else derives from the pinned blocks, so that lineage
+    # runs exactly once; pinning the union of both orientations instead
+    # ran it once per union branch (25 jobs and 2.2 s of
+    # corpus_full_curation's 3.7 s build on the 500-document curation
+    # benchmark fixture).
+    pinned = _truncate(edges.select(_id(src).alias("s"), _id(dst).alias("t")))
+    # the doubled edge set is a map-side union over the pinned blocks:
+    # no shuffle, and no dedup needed (a duplicate edge only feeds the
+    # same value to min() twice)
+    doubled = pinned.union(pinned.select(F.col("t").alias("s"), F.col("s").alias("t")))
+
+    def _round(df: DataFrame, label: "F.Column", old: "F.Column"):
+        """Pins one round's (id, label) frame. The count of nodes whose
+        label moved rides the pin job as an observed metric, so the
+        convergence probe runs no job of its own."""
+        obs = Observation()
         stepped = _truncate(
+            df.groupBy("s")
+            .agg(label.alias("label"), old.alias("__old"))
+            .observe(
+                obs,
+                F.count(F.when(F.col("label") != F.col("__old"), 1)).alias("moved"),
+            )
+        )
+        return stepped.select(F.col("s").alias("id"), "label"), obs.get["moved"] == 0
+
+    if max_iter < 1:
+        labels, done = (
+            doubled.select(F.col("s").alias("id")).distinct().withColumn("label", F.col("id")),
+            False,
+        )
+    else:
+        # round 1 needs no label frame and no join: every label starts
+        # as its own id, so a node's new label is the least of its own
+        # id and its neighbors' ids
+        labels, done = _round(doubled, F.least(F.col("s"), F.min("t")), F.col("s"))
+    # self-loops for the later rounds: each node's own label reaches
+    # the neighbor-min aggregate through the same join — no separate
+    # labels left-join. The node set is round 1's pinned output, so
+    # `bi` itself stays unpinned: every round reads it as a map-side
+    # union of pinned block sets
+    bi = doubled.union(labels.select(F.col("id").alias("s"), F.col("id").alias("t")))
+    rounds = 1
+    while not done and rounds < max_iter:
+        rounds += 1
+        labels, done = _round(
             bi.join(
                 labels.hint("shuffle_hash").select(
                     F.col("id").alias("t"), F.col("label").alias("t_label")
                 ),
                 "t",
-            )
-            .groupBy("s")
-            .agg(
-                F.min("t_label").alias("label"),
-                # the self-loop's contribution IS the node's old label —
-                # the convergence probe needs no second join
-                F.min(
-                    F.when(F.col("t") == F.col("s"), F.col("t_label"))
-                ).alias("__old"),
-            )
+            ),
+            F.min("t_label"),
+            # the self-loop's contribution IS the node's old label —
+            # the convergence probe needs no second join
+            F.min(F.when(F.col("t") == F.col("s"), F.col("t_label"))),
         )
-        # map-only filter over the pinned blocks (no join, no shuffle)
-        done = stepped.filter(F.col("label") != F.col("__old")).isEmpty()
-        labels = stepped.select(F.col("s").alias("id"), "label")
-        if done:
-            converged = True
-            break
-    if not converged:
+    if not done:
         warnings.warn(
             f"connected_components exhausted max_iter={max_iter} without "
             "converging; components with diameter > max_iter are split into "
@@ -715,6 +756,11 @@ def containment_pairs(
     on trusted-small corpora only."""
     sh = word_shingles(df, id_col, text_col, n)
     if max_df is not None:
+        # eager=False still runs jobs at build time: under AQE, building
+        # the checkpoint RDD executes every shuffle-map stage below the
+        # pin (shingle distinct, df count, hot-set anti join, posting
+        # groupBy) — four build jobs at this site (measured at sf0.01);
+        # only the final aggregate waits for an action
         postings = _pruned_postings(sh, max_df).localCheckpoint(eager=False)
         sh = postings.select(F.explode("ids").alias("id"), "shingle")
         # i<j combinations generated inside ONE whole-stage-codegen

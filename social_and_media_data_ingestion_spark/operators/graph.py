@@ -160,29 +160,36 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     standard distributed formulation (cf. Suri & Vassilvitskii, WWW'11,
     "Counting Triangles and the Curse of the Last Reducer") — with no
     quadratic hub blowup, unlike the naive undirected wedge join.
+
+    Returns ONE lazy one-row plan: the triangle count crossJoined with
+    the wedge sum, clustering computed in the plan — no driver action,
+    no driver-side math. On an empty graph the wedge sum and the 3t/w
+    ratio are NULL, not 0 (SQL engines agree on SUM over no rows; r7
+    empty-tables probe).
     """
     # the canonical edge set feeds THREE consumers (degrees, wedge join,
-    # closing probe) across two actions — pin it so the caller's
-    # (possibly expensive) edge derivation runs once. LAZY pin
-    # (round-10 adjudication): a lazy localCheckpoint persists at first
-    # materialization, so the second action still reads pinned blocks —
-    # the old eager=True bought nothing but a job at plan-construction
-    # time. The accepted trade: the first action's three consumers can
-    # benignly race-recompute a partition before it lands in the cache
-    # ("Block already exists" warnings), never a correctness issue on
-    # this deterministic distinct.
+    # closing probe) — pin the caller's edges so their (possibly
+    # expensive) derivation runs once. eager=False is NOT lazy under
+    # AQE: building the checkpoint RDD runs every shuffle-map stage of
+    # the caller's lineage at build time (four build jobs for
+    # graph_triangle_suppliers' lineitem edges at sf0.01); only its last
+    # stage waits for the action. The pin sits BELOW the distinct, so
+    # an edge frame with no exchange (e.g. an empty one) runs no job at
+    # build time, and the three consumers' identical distinct exchanges
+    # are reused inside the one plan. Unpinned, the plan re-optimizes a
+    # copy of the caller's lineage per consumer after every adaptive
+    # stage (measured ~1.5 s vs ~1.0 s per call at sf0.01, 4 cores).
     e = (
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("a"),
             F.greatest(F.col(src), F.col(dst)).alias("b"),
         )
+        .localCheckpoint(eager=False)
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     deg = (
-        e.select(F.col("a").alias("n"))
-        .unionAll(e.select(F.col("b").alias("n")))
+        e.select(F.explode(F.array("a", "b")).alias("n"))
         .groupBy("n")
         .agg(F.count("*").alias("d"))
     )
@@ -207,29 +214,17 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     closing = e.select(
         F.least("a", "b").alias("x"), F.greatest("a", "b").alias("y")
     )
-    tri = wedges.join(closing, ["x", "y"]).count()
-    n_wedges = (
-        deg.select(F.sum(F.col("d") * (F.col("d") - 1) / 2).cast("long")).first()[0]
+    tri = wedges.join(closing, ["x", "y"]).agg(F.count("*").alias("n_triangles"))
+    n_wedges = deg.agg(
+        F.sum(F.col("d") * (F.col("d") - 1) / 2).cast("long").alias("n_wedges")
     )
-    spark = edges.sparkSession
-    schema = "n_triangles bigint, n_wedges bigint, clustering double"
-    if n_wedges is None:
-        # no nodes at all: SUM over the empty degree frame is NULL, and
-        # SQL engines agree the wedge count and the 3t/w ratio are NULL
-        # here, not 0 (r7 empty-tables probe)
-        return spark.createDataFrame([(int(tri), None, None)], schema)
-    clustering = 3.0 * tri / n_wedges if n_wedges else 0.0
-    import math
-
-    return spark.createDataFrame(
-        [
-            (
-                int(tri),
-                int(n_wedges),
-                math.floor(clustering * 1_000_000 + 0.5) / 1_000_000,
-            )
-        ],
-        schema,
+    ratio = F.lit(3.0) * F.col("n_triangles") / F.col("n_wedges")
+    return tri.crossJoin(n_wedges).select(
+        "n_triangles",
+        "n_wedges",
+        F.when(F.col("n_wedges") == 0, F.lit(0.0))
+        .otherwise(F.floor(ratio * 1_000_000 + 0.5) / 1_000_000)
+        .alias("clustering"),
     )
 
 

@@ -91,13 +91,17 @@ def near_dedup(
         docs.select(F.col(id_col).alias("id"), F.col(keep_col).alias("__keep")),
         "id",
     )
-    best = F.max(F.struct(F.col("__keep"), (-F.col("id")).alias("neg_id")))
-    canon = member.groupBy("cluster_id").agg(
-        (-best.getField("neg_id")).alias("canonical_id")
+    # the canonical member heads its cluster ordered by keep_col (NULLs
+    # last), then id; every member whose id differs from it is dropped.
+    # One window exchange instead of a max-aggregate plus an anti join
+    w = Window.partitionBy("cluster_id").orderBy(
+        F.col("__keep").desc_nulls_last(), F.col("id").asc()
     )
-    drop = member.join(
-        canon, member.id == canon.canonical_id, "left_anti"
-    ).select(F.col("id").alias(id_col))
+    drop = (
+        member.withColumn("__canon", F.first("id").over(w))
+        .filter(F.col("id") != F.col("__canon"))
+        .select(F.col("id").alias(id_col))
+    )
     return docs.join(drop, id_col, "left_anti")
 
 
@@ -161,18 +165,27 @@ def pretraining_corpus_pipeline(
     """Full curation chain; returns every stage so callers can persist
     between the expensive ones and audit per-stage attrition.
 
-    persist=True caches the exact-dedup and near-dedup survivor frames:
+    persist=True pins the exact-dedup and near-dedup survivor frames:
     the downstream stages each re-derive signatures/shingles from their
-    input, so without caching the gate+dedup lineage re-executes once per
+    input, so without a pin the gate+dedup lineage re-executes once per
     later stage (measured ~2x end-to-end on the composite oracle query).
-    On a cluster this is the stage boundary you would checkpoint."""
+    The exact frame is cached: its plan is the same on every call over
+    the same input, so repeated calls share one cache entry. The near
+    frame is localCheckpoint-ed instead: its plan scans the connected-
+    components pin, which is new on every call, so a cache entry would
+    never be shared — and the session's cache manager holds every entry
+    (and the pinned blocks its plan scans) until an explicit unpersist,
+    one more per call. A checkpoint is reclaimed once the frame is
+    dropped. Under AQE eager=False still runs the near stage's
+    shuffle-map stages at build time; only its last stage waits for an
+    action."""
     gated = quality_gate(docs, text_col)
     exact = exact_dedup(gated, id_col, text_col)
     if persist:
         exact = exact.persist()
     near = near_dedup(exact, id_col, text_col)
     if persist:
-        near = near.persist()
+        near = near.localCheckpoint(eager=False)
     clean = decontaminate(near, eval_docs, id_col, text_col, max_overlap=max_overlap)
     return {
         "quality_gate": gated,

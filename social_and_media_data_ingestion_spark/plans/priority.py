@@ -4,861 +4,75 @@ The driver checks the FIRST 50 registry entries per round; PRIORITY_HEAD
 curates that head. It lives in its own module (round-6 verdict item 1)
 so that rotation edits never touch plans/queries*.py — under the
 content-hash staleness ledger (tools/stale_rows.py) a head edit must not
-look like a code change to any query. Historical _ROUND*_HEAD lists are
-the rotation ledger; they are inert.
+look like a code change to any query. Earlier heads are in git history.
 """
 
 from __future__ import annotations
 
-# Driver-sampling order: the harness checks the FIRST 50 registry entries,
-# so the head of the registry is curated to span every operator class
-# (ingestion, both keyword semantics, all join kinds, the full dedup + ANN
-# stacks incl. recall audits, quantization, multimodal, event/session
-# analytics, text/LLM-pipeline stages, corpus curation, and the hardest
-# TPC-H rewrite). Everything else follows in registration order.
-# The driver samples the FIRST 50 registry entries per round. Rotation
-# policy (round-3 advice): entries whose code changed this round lead (they
-# need fresh driver evidence), the rest are queries the driver has NEVER
-# sampled — so driver-green evidence accumulates across rounds instead of
-# re-proving the same 50. Everything dropped from the head stays covered by
-# the local gate (tools/verify_local.py runs all 167 with the identical
-# oracle mechanism).
+# Driver-sampling order: the harness checks the FIRST 50 registry entries
+# per round; everything else follows in registration order. Rotation
+# policy (round-3 advice): entries whose code changed lead (they need
+# fresh driver evidence); the rest are never-sampled queries, then those
+# whose newest green driver row is oldest — so driver-green evidence
+# accumulates across rounds instead of re-proving the same 50. Everything
+# outside the head stays covered by the local gate (tools/verify_local.py
+# runs every registry query with the identical oracle mechanism).
 PRIORITY_HEAD = [
-    # ================= round-14 head =================
     # Composition, in rotation-policy order:
-    #   1. every query whose closure changed in the r14 OPTIMIZATION
-    #      round (20): the 3 direct users of the newly one-shuffle
-    #      _global_rank/global_ntile/global_running_min
-    #      (window_ntile_quartiles, docs_quality_deciles,
-    #      part_price_skyline) plus the 8 prefix/rank riders of the
-    #      unified global_row_number; the 5 connected_components users
-    #      (self-loop fold: 1 join/iteration instead of 3); the 2
-    #      Aho-Corasick 5k-keyword queries and multimodal_image_dim_sniff
-    #      (single-split scan parallelized, jpeg-style guard);
-    #      text_shingle_novelty (join-back -> first-seen aggregate);
-    #   2. fill to 50 with the oldest-evidence re-proofs (r5 TPC-H,
-    #      the r6 batch, ledger order).
-    "docs_quality_deciles",
-    "window_ntile_quartiles",
-    "part_price_skyline",
-    "events_max_concurrent",
-    "lineitem_abc_pareto",
-    "stats_kruskal_wallis_returnflag",
-    "stats_ks_two_sample",
-    "stats_mann_whitney_status",
-    "stats_spearman_qty_price",
-    "supplier_revenue_gini",
-    "text_rrf_fusion",
+    #   1. every query the staleness ledger marks stale (8): the
+    #      closures of connected_components (one edge pin, observed
+    #      convergence), the candidate-restricted ngram_jaccard_pairs
+    #      verify and the one-plan triangle_count changed;
+    #   2. fill to 50 with the oldest-evidence re-proofs (newest
+    #      green driver row in r7, then r8; ledger order).
+    "dedup_minhash_calibration",
+    "graph_triangle_suppliers",
+    "corpus_full_curation",
     "dedup_canonical_selection",
     "dedup_near_dup_clusters",
-    "er_entity_clusters",
-    "er_resolution_pipeline",
-    "corpus_full_curation",
-    "f2_keyword_substring_5k",
-    "f3_keyword_word_5k",
-    "multimodal_image_dim_sniff",
-    "text_shingle_novelty",
-    "q11_important_parts",
-    "q12_priority_by_flag",
-    "q15_top_supplier",
-    "q16_supplier_part_counts",
-    "q17_small_quantity_revenue",
-    "q19_banded_revenue",
-    "q20_excess_shippers",
-    "q22_idle_balances",
-    "agg_bitwise_masks",
-    "agg_collect_sorted",
-    "agg_percentiles",
-    "customer_segment_mix",
     "dedup_ngram_jaccard",
-    "docs_topk_per_source",
-    "events_audience_overlap",
-    "events_hour_profile",
-    "events_repeat_runs",
-    "events_value_histogram",
-    "explode_token_topk",
-    "lineitem_ship_latency",
-    "orders_size_distribution",
-    "scalar_date_arithmetic",
-    "scalar_levenshtein",
-    "sql_passthrough_agg",
-    "supplier_part_coverage",
-    "text_boilerplate_fraction",
-    "text_shingles_3gram",
-    "window_dense_rank_parts",
-    "window_percentile_standing",
-    "array_set_ops",
-]
-
-
-_ROUND13_HEAD = [
-    # ================= round-13 head =================
-    # Composition, in rotation-policy order:
-    #   1. every query whose closure changed in r13 (38): the two
-    #      inf-probe oracle-crash repairs (ml_drift_psi's clamped
-    #      bin, agg_linear_regression's explicit moment sums), the
-    #      five image closures riding the decode_jpeg advice fixes
-    #      (needs_codec routing for non-interleaved/CMYK baseline
-    #      variants, Adobe APP14 transform=0 RGB), and the ~31
-    #      closures repaired after the differential random-fuzz
-    #      probe (asof struct-carry, NULLS LAST pins, NULL-ts time
-    #      contract, quantize-then-sum cents, null-aware rank
-    #      stats, 128-bit abc_pareto, decimal-safe running-sum
-    #      offsets, sketch-population rank targets);
-    #      ... plus the 4 documents closures from the fuzz's second
-    #      documents wave (URL-safe synthesis + try_parse_url; the
-    #      three oracle join-back de-fanouts under whole-row dups),
-    #      and the 6 closures from the off-rotation seed sweep
-    #      (1014/1015/2014/2015): cube/filtered-counts cents, corr's
-    #      try_divide spelling, gini's 128-bit totals, the two 6dp
-    #      free-form value sums, spearman's floor-vs-cast rank key;
-    #   2. fill to 50 with the oldest-evidence re-proofs (r5 TPC-H).
-    "scalar_url_components",
-    "text_repetition_signals",
-    "corpus_full_curation",
-    "text_rrf_fusion",
-    "agg_cube_revenue",
-    "agg_filtered_counts",
-    "agg_corr_stats",
-    "supplier_revenue_gini",
-    "events_daily_active",
-    "events_time_bucket_rollup",
-    "ml_drift_psi",
-    "agg_linear_regression",
-    "multimodal_jpeg_pixel_stats",
-    "multimodal_image_pixel_stats",
-    "multimodal_image_profile",
-    "multimodal_gif_pixel_stats",
-    "multimodal_png_pixel_stats",
-    "agg_mode_event_type",
-    "scd2_user_state_history",
-    "unpivot_price_components",
-    "window_lag_delta",
-    "window_running_revenue",
-    "events_percent_change_daily",
-    "agg_rollup_revenue",
-    "events_session_window",
-    "events_windowed_agg",
-    "agg_approx_stats",
-    "events_max_concurrent",
-    "orders_rfm_segmentation",
-    "scalar_json_extract",
-    "agg_grouping_sets",
-    "events_anomaly_zscore",
-    "events_hopping_window",
-    "events_session_window_streaming",
-    "events_sessionize",
-    "events_time_weighted_avg",
-    "events_transition_matrix",
-    "events_trigram_paths",
-    "j9_asof_view_purchase",
-    "stream_asof_enrich_purchases",
-    "j10_asof_tolerance_1h",
-    "j11_asof_nearest_purchase",
-    "lineitem_abc_pareto",
-    "orders_cohort_ltv",
-    "stats_kruskal_wallis_returnflag",
-    "stats_ks_two_sample",
-    "stats_mann_whitney_status",
-    "stats_spearman_qty_price",
-    # -- swapped in late-r13: the off-rotation fuzz (seed 1016) fixed
-    #    lineitem_anova's NULL-group poisoning, staling its closure
-    #    (displaces the first oldest-evidence re-proof, q15)
-    "lineitem_anova_returnflag",
-    # -- swapped in late-r13: decode_wav_pcm gained 24/32-bit PCM,
-    #    staling the audio closure (changed-closure beats the second
-    #    oldest-evidence re-proof, q17_small_quantity_revenue)
-    "multimodal_audio_chunks",
-]
-
-
-_ROUND12_HEAD = [
-    # ================= round-12 head =================
-    # Composition, in rotation-policy order:
-    #   1. the round's growth query (never sampled): the REAL stdlib
-    #      baseline-JPEG pixel decode, proved by natively-SQL-
-    #      synthesized SOF0 fixtures with closed-form channel means;
-    #   2. every query whose closure changed in r12 — the 5 multimodal
-    #      closures riding decode_jpeg's arrival + the TIFF advice
-    #      fixes, and the ~36 closures touched by the numeric-extremes
-    #      repairs: the magnitude-safe _r rounding helper (Spark's
-    #      long-typed floor saturated at 2^63), the five
-    #      sufficient-statistic queries whose int64 moment sums became
-    #      128-bit (decimal(38,0)/HUGEINT), and the quantize-first
-    #      cohort-LTV rewrite;
-    #   3. fill to 50 with the oldest-evidence fresh rows (r5 cohort,
-    #      ledger order).
-    "multimodal_jpeg_pixel_stats",
-    "corpus_dedup_rate_by_source",
-    "events_conversion_wilson",
-    "corpus_mixture_weights",
-    "supplier_revenue_gini",
-    "emb_knn_label_audit",
-    "events_srm_check",
-    "lineitem_abc_pareto",
-    "lineitem_anova_returnflag",
-    "ml_split_leakage_audit",
-    "orders_ab_welch_ttest",
-    "orders_cuped_theta",
-    "orders_daily_trend",
-    "stats_kruskal_wallis_returnflag",
-    "stats_ks_two_sample",
-    "stats_mann_whitney_status",
-    "stats_spearman_qty_price",
-    "text_shingle_novelty",
-    "dedup_shingle_containment",
-    "dq_constraint_report",
-    "events_autocorrelation",
-    "events_markov_stationary",
-    "events_resample_gapfill",
-    "ml_naive_bayes_source",
-    "events_chi2_type_weekday",
-    "events_retention_matrix",
-    "events_seasonal_anomaly",
-    "events_stickiness_weekly",
-    "graph_adamic_adar_suppliers",
-    "join_bloom_filter_audit",
-    "ml_drift_psi",
-    "multimodal_gif_pixel_stats",
-    "multimodal_image_dim_sniff",
-    "multimodal_image_pixel_stats",
-    "multimodal_image_profile",
-    "multimodal_png_pixel_stats",
-    "orders_cohort_ltv",
-    "orders_forecast_backtest",
-    "stats_theil_sen_trend",
-    "stats_winsorized_prices",
-    "text_bm25_scores",
-    "text_feature_hashing",
-    "text_rrf_fusion",
-    "supplier_concentration_hhi",
-    "text_type_token_ratio",
-    "stream_stateful_running_totals",
-    "stream_dedup_watermark",
-    "j10_asof_tolerance_1h",
-    "j11_asof_nearest_purchase",
-    "q13_order_distribution",
-]
-
-
-_ROUND11_HEAD = [
-    # ================= round-11 head =================
-    # Composition, in rotation-policy order:
-    #   1. the round's two growth queries (never sampled): the REAL
-    #      stdlib-zlib PNG pixel decode, proved at scale by natively
-    #      synthesized stored-deflate-block PNGs with a 3-way filter-
-    #      encoding rotation against a closed-form raster oracle; and
-    #      the REAL pure-Python-LZW GIF pixel decode, proved by
-    #      natively synthesized fixed-width GIF code streams plus two
-    #      fixed frames forcing the dictionary-hit and KwKwK paths;
-    #   2. every query whose closure changed in r11 — the image
-    #      sniff/stats advice fixes (JPEG fill-byte skip + uniform
-    #      both-fields dims gate ride the dim-sniff closure; the
-    #      status column rides pixel_stats; decode_images' PNG routing
-    #      rides image_profile) and the scan-sharing sweep (tfidf
-    #      postings pin, the tagged-gram one-pass PMI, the weighted
-    #      postings bigram logprob, the pinned chi2 contingency and
-    #      PSI cells, the daily-aggregate-derived gap-fill spine, the
-    #      pinned retention user-week frame, the zero-shuffle in-row
-    #      repetition signals);
-    #   3. fill to 50 with the oldest-evidence fresh rows (the 22
-    #      remaining r4 rows + the first 11 r5 rows, ledger order —
-    #      two r5 slots ceded to the late cohort-ltv / stickiness
-    #      scan-sharing closures, one to the GIF growth query, one to
-    #      the TIFF-magic format-sniff re-proof, one to the pre-epoch
-    #      floor fix on the datetime roundtrip).
-    "multimodal_png_pixel_stats",
-    "multimodal_gif_pixel_stats",
-    # -- changed in r11
-    "multimodal_image_dim_sniff",
-    "multimodal_image_pixel_stats",
-    "multimodal_image_profile",
-    "text_tfidf_topterms",
-    "text_pmi_bigrams",
-    "text_bigram_logprob",
-    "text_repetition_signals",
-    "events_chi2_type_weekday",
-    "ml_drift_psi",
-    "events_gap_filled_daily",
-    "events_retention_matrix",
-    "orders_cohort_ltv",
-    "events_stickiness_weekly",
-    # late r11: the native TIFF IFD0 dim sniff rides the dim-sniff
-    # closure (already above); the TIFF magics in MAGIC_MIMES change
-    # the format-sniff closure, re-proved here
-    "multimodal_format_sniff",
-    # late r11: the temporal-extremes harness found unix_timestamp's
-    # toward-zero truncation mapping pre-epoch fractional seconds one
-    # second late; the floor-division fix changes this closure
-    "scalar_datetime_roundtrip",
-    # (text_bm25_scores and text_rrf_fusion also changed in r11 — they
-    # already sit in the r4 re-proof fill below)
-    # -- oldest evidence (r4) re-proof
-    "text_inverted_index",
-    "j9_asof_view_purchase",
-    "orders_repurchase_survival",
-    "orders_benford_audit",
-    "lake_merge_upsert",
-    "stream_asof_enrich_purchases",
-    "sample_weighted_reservoir",
-    "text_bm25_scores",
-    "graph_adamic_adar_suppliers",
-    "stats_winsorized_prices",
-    "text_rrf_fusion",
-    "join_bloom_filter_audit",
-    "events_seasonal_anomaly",
-    "stats_theil_sen_trend",
-    "text_feature_hashing",
-    "graph_kcore_suppliers",
-    "part_price_skyline",
-    "events_trigram_paths",
-    "sample_rendezvous_shards",
-    "graph_bfs_reachability",
-    "orders_forecast_backtest",
-    "scalar_url_components",
-    # -- oldest evidence (r5) re-proof
-    "q4_order_priority",
-    "q14_promo_share",
-    "j7_full_outer_counts",
-    "j8_cross_join_grid",
-    "skew_salted_type_counts",
-    "sample_hash_mod",
-    "doc_pack_contexts",
-    "sample_stratified_hash",
-    "corpus_profile",
-    "window_time_range_moving_avg",
-    "events_time_bucket_rollup",
-]
-
-
-_ROUND10_HEAD = [
-    # ================= round-10 head =================
-    # The first head composed on a CLEAN ledger (r9 ended 0 stale /
-    # 0 never), so the rotation policy's third tier finally activates:
-    # after the changed/new rows, slots re-prove the rows with the
-    # OLDEST driver evidence (r3) instead of draining a stale queue.
-    # Composition, in rotation-policy order:
-    #   1. the round's growth queries (never sampled): the native
-    #      JPEG/PNG/BMP header-dimension sniff (bounded aggregate()
-    #      marker walk, blind-parse vs construction-arithmetic oracle)
-    #      and the two spec-faithful TPC-H rewrites (windowed Q4 with
-    #      an interval residual on the semi join; exact-arithmetic Q14);
-    #   2. every query whose closure changed in r10 — the hostile-WAV
-    #      frame-rate guard (audio chunks), the ''-key candidate gate
-    #      (recall audit), the single-tokenize + lazy-pin Naive Bayes
-    #      plan diet, the two eager->lazy pin conversions (shingle
-    #      postings, triangle edges), and the decode_images real-path
-    #      routing (image profile rides its closure);
-    #   3. fill to 50 with the oldest-evidence fresh rows (all 32 r3
-    #      rows + the first 5 r4 rows, ledger order).
-    "multimodal_image_dim_sniff",
-    "multimodal_image_pixel_stats",
-    "emb_nonfinite_audit",
-    "q4_priority_followup",
-    "q14_promo_revenue",
-    # -- changed in r10
-    "multimodal_audio_chunks",
-    "er_blocking_recall_audit",
-    "ml_naive_bayes_source",
-    "dedup_shingle_containment",
-    "graph_triangle_suppliers",
-    "multimodal_image_profile",
-    "multimodal_format_sniff",
-    "dq_constraint_report",
-    # -- oldest evidence (r3) re-proof
-    "agg_entropy_by_source",
-    "agg_grouping_sets",
-    "agg_hll_distinct_audit",
-    "agg_linear_regression",
-    "agg_median_mad",
-    "bpe_pair_counts",
-    "events_anomaly_zscore",
-    "events_cumulative_distinct_users",
-    "events_gap_filled_daily",
-    "events_hopping_window",
-    "events_session_window_streaming",
-    "events_sessionize",
-    "events_time_weighted_avg",
-    "events_transition_matrix",
-    "events_weekly_retention",
-    "flagship_submission_extract",
-    "orders_market_basket",
-    "q10_returned_items",
-    "q18_large_volume_orders",
-    "q2_min_cost_supplier",
-    "q5_local_supplier_volume",
-    "q6_forecast_revenue",
-    "q7_nation_volume",
-    "q8_market_share",
-    "sample_temperature_by_source",
-    "stream_static_enrich_counts",
-    "stream_stream_join_events",
-    "stream_windowed_counts",
-    "text_tfidf_topterms",
-    "text_zipf_fit",
-    "window_activity_streaks",
-    "window_share_of_total",
-    # -- oldest evidence (r4) re-proof
-    "agg_countmin_audit",
-    "events_autocorrelation",
-    "events_coactivity_histogram",
-    "events_markov_stationary",
-    "events_resample_gapfill",
-]
-
-
-_ROUND9_HEAD = [
-    # ================= round-9 head =================
-    # The rotation-FINISHING round (round-8 verdict item 1): the ledger
-    # (tools/stale_rows.py) reads 49 stale + 1 never on this tree, and
-    # all 50 fill the 50-slot head exactly — after CORRECTNESS_r09 lands the
-    # ledger reads ZERO and the suite's arming test
-    # (tests/test_stale_ledger.py) keeps it that way. Composition, in
-    # rotation-policy order:
-    #   1. the round's one growth query (never sampled): the end-to-end
-    #      ER pipeline (union blocking -> CC -> entity report);
-    #   2. every query whose closure changed in r9 — the ''-block guard
-    #      on the union linkage, the NULL-propagating LSH bucket + lazy
-    #      pin (minhash family + full-curation composite), the pinned
-    #      approx-stats sketch frame, and the real stdlib-wave decode
-    #      path added beside chunk_audio's fake;
-    #   3. ALL 38 remaining stale rows, oldest evidence first.
+    "er_entity_clusters",
     "er_resolution_pipeline",
-    # -- changed in r9
-    "multimodal_audio_chunks",
-    "agg_approx_stats",
-    "corpus_full_curation",
-    "dedup_minhash_calibration",
-    "dedup_minhash_lsh_pairs",
-    "er_union_blocked_linkage",
-    # -- changed in r9 (second batch): the whole ER family moved to the
-    #    threshold form of levenshtein (banded O(len*k) DP, -1 past the
-    #    bound) — same rows, same values, re-proof slots required
-    "er_blocked_name_linkage",
-    "er_blocking_recall_audit",
-    "er_entity_clusters",
-    "er_phonetic_blocked_pairs",
-    # -- changed in r9 (third batch): ANSI getItem crash on single-token
-    #    names, found by the hostile-names harness; F.get now
-    "part_name_parse",
-    # -- stale queue, oldest evidence (r2) first
-    "scalar_json_extract",
-    "text_chunk_documents",
-    "text_quality_score",
-    "text_token_counts",
-    "union_events_orders",
-    "window_topk_orders",
-    "agg_quantile_sketch_audit",
-    "corpus_curate_pipeline",
-    "docs_quality_deciles",
-    "events_max_concurrent",
-    "orders_rfm_segmentation",
-    "q9_profit_by_nation",
-    "window_ntile_quartiles",
-    "dq_constraint_report",
-    "dq_reconciliation_orders",
-    "graph_pagerank_iters12",
-    "lineitem_abc_pareto",
-    "stream_neardup_filter",
-    "stream_threshold_alerts",
-    "text_pmi_bigrams",
-    "text_repetition_signals",
-    "dedup_canonical_selection",
-    "emb_label_centroid_distances",
-    "events_srm_check",
-    "graph_pagerank_dangling",
-    "lineitem_anova_returnflag",
-    "ml_split_leakage_audit",
-    "orders_ab_welch_ttest",
-    "orders_cuped_theta",
-    "stats_kruskal_wallis_returnflag",
-    "stats_ks_two_sample",
-    "stats_mann_whitney_status",
-    "stats_spearman_qty_price",
-    "text_langid_confusion",
-    "text_shingle_novelty",
-    "customer_balance_outliers",
-    "graph_triangle_suppliers",
-    "orders_daily_trend",
-]
-
-
-_ROUND8_HEAD = [
-    # round-8 head, kept for the rotation ledger (these 50 all went
-    # driver-green in CORRECTNESS_r08.json)
-    # ================= round-8 head =================
-    # The low-churn rotation round (round-7 verdict item 1): drain the
-    # oldest of the 87-row staleness queue. Composition, in rotation-
-    # policy order:
-    #   1. the round's one growth query (never sampled): the
-    #      union-blocked ER linkage;
-    #   2. every query whose closure changed in r8 — the bounded-error
-    #      approx-stats oracle, the LSH triplication fix + bucket-frame
-    #      pin (minhash family), and the CC/_pruned_postings hardening
-    #      (containment, clusters);
-    #   3. oldest-evidence stale fill: all 20 r1-evidence rows and the
-    #      first 23 (of 29) r2-evidence rows, alphabetical within age.
-    # `python tools/stale_rows.py` prints the remaining queue (the r9
-    # head); everything displaced stays covered by the local full gate
-    # (tools/verify_local.py runs all 257 with the identical oracle
-    # mechanism).
-    "er_union_blocked_linkage",
-    "agg_approx_stats",
-    "dedup_minhash_calibration",
-    "dedup_minhash_lsh_pairs",
-    "dedup_near_dup_clusters",
-    "dedup_shingle_containment",
-    "er_entity_clusters",
-    # -- oldest-evidence stale fill: r1 rows
-    "a4_distinct_dim",
-    "agg_cube_revenue",
-    "agg_distinct_stats",
-    "agg_having_big_customers",
-    "f4_date_range",
-    "f5_lenient_parse_null_drop",
-    "f6_url_shape",
-    "f7_terms_extract",
-    "j4_anti_join",
-    "p4_concat_strip_urls",
-    "p5_nested_head",
-    "pivot_lineitem_status",
-    "q3_shipping_priority",
-    "scalar_datetime_roundtrip",
-    "scalar_dotted_date",
-    "scalar_string_funcs",
-    "setop_except",
-    "setop_intersect",
-    "subquery_above_avg",
-    "text_rolling_fingerprint",
-    # -- oldest-evidence stale fill: r2 rows (first 23 of 29)
-    "a2_dedup_keep_first",
-    "a3_keep_latest",
-    "a6_max_watermark",
-    "agg_pricing_summary",
-    "agg_rollup_revenue",
-    "corpus_decontaminate",
-    "corpus_full_curation",
-    "dedup_fingerprint",
-    "dedup_simhash",
-    "events_funnel_conversion",
-    "events_session_window",
-    "events_windowed_agg",
-    "f2_keyword_substring",
-    "f3_keyword_word_boundary",
-    "j1_semi_join",
-    "j2_fk_join_agg",
-    "j3_self_join_next_line",
-    "j5_asof_last_login",
-    "j6_range_band_join",
-    "p1_project_defaults",
-    "pii_redact_documents",
-    "q21_waiting_suppliers",
-    "scalar_german_date",
-]
-
-
-_ROUND7_HEAD = [
-    # round-7 head, kept for the rotation ledger (these 50 all went
-    # driver-green in CORRECTNESS_r07.json)
-    # ================= round-7 head (final) =================
-    # Built by the content-hash ledger (tools/stale_rows.py), priority:
-    #   1. never-sampled growth queries (ER phonetic family, magic-byte
-    #      sniffer, non-finite metrics audit);
-    #   2. every query whose code or oracle changed in r7 (perf items,
-    #      null-riddled-harness fixes, the valid-vector contract over
-    #      the embedding family, the extreme-timestamp fixes);
-    #   3. oldest-evidence stale fill.
-    # The remaining stale rows are the round-8 queue (run
-    # `python tools/stale_rows.py` for the authoritative list).
-    # Everything displaced stays covered by the local full gate
-    # (tools/verify_local.py runs all 255 with the identical oracle
-    # mechanism).
-    # late-r7 growth: the dimension-contract gate (never sampled, new
-    # code) takes the slot of emb_label_centroid_distances, whose
-    # changed-in-r7 re-proof moves to the r8 queue — never-sampled
-    # growth outranks a re-proof under the rotation policy
-    "emb_dim_audit",
-    "er_blocking_recall_audit",
-    "er_entity_clusters",
-    "er_phonetic_block_audit",
-    "er_phonetic_blocked_pairs",
-    "events_nonfinite_audit",
-    "multimodal_format_sniff",
-    "dedup_shingle_containment",
-    "dedup_near_dup_clusters",
-    "events_decayed_activity",
-    "f2_keyword_substring_5k",
-    "f3_keyword_word_5k",
-    "graph_pagerank_purchases",
-    "text_language_id",
-    "text_kwic_contexts",
-    "dedup_minhash_lsh_pairs",
-    "dedup_minhash_signatures",
-    "dedup_minhash_calibration",
-    "array_set_ops",
-    "sample_fixed_quota_per_source",
-    "multimodal_image_profile",
-    "multimodal_audio_chunks",
-    "multimodal_frame_sample",
-    "ml_drift_psi",
-    "events_percent_change_daily",
-    "events_retention_matrix",
-    "events_stickiness_weekly",
     "dedup_embedding_cosine",
-    "sim_cosine_topk",
-    "emb_vector_stats",
-    "sim_lsh_topk",
-    "sim_ivf_topk",
-    "sim_ivf_lloyd_topk",
-    "emb_lloyd_centroids",
+    "dedup_minhash_signatures",
+    "emb_cluster_purity",
+    "emb_dim_audit",
+    "emb_dim_variance",
+    "emb_hard_negatives",
     "emb_kmeans_assign",
     "emb_kmeans_update",
-    "emb_hard_negatives",
-    "emb_quantize_int8",
-    "sim_int8_topk",
-    "sim_ann_recall",
-    "sim_ivf_recall",
-    "sim_ivf_lloyd_recall",
-    "emb_pq_topk",
-    "emb_pq_recall",
-    "sim_retrieval_mrr",
-    "emb_pca_top_component",
-    "emb_cluster_purity",
-    "emb_truncation_recall",
-    "emb_dim_variance",
-    "emb_knn_label_audit",
-]
-
-
-_ROUND6_HEAD = [
-    # round-6 head, kept for the rotation ledger (these 50 all went
-    # driver-green in CORRECTNESS_r06.json)
-    # ================= round-6 head =================
-    # The planned backlog-exhausting rotation (round-5 verdict item 1,
-    # RESULTS.md "Round-6 head-rotation note"): 14 re-proofs for queries
-    # whose code changed in r5/r6 after their last driver row, then the
-    # 36 never-driver-sampled registry queries (tools/next_head.py) in
-    # registry order. After this round every registry query has a driver
-    # row (cumulative 249/249) and every changed query's evidence
-    # postdates its change. Two substitutions vs the written note, both
-    # trading an already-evidenced re-proof for a query changed in r6:
-    # dedup_canonical_selection (already re-proved by its r05 row, which
-    # postdates all r5 changes) is replaced by dedup_shingle_containment
-    # (its df-guard was REWRITTEN in round 6, so its r05 row is stale);
-    # corpus_full_curation (its r5 change — the CC edge pin — already
-    # carries post-change driver evidence through canonical_selection's
-    # r05 row, and each of its pipeline stages has its own row) yields
-    # to scd2_user_state_history, whose tie-break SEMANTICS changed in
-    # round 6 (spell window now orders by (ts, event_id); oracle
-    # mirrored — see tests/test_robustness.py timestamp-tie harness).
-    # graph_pagerank_dangling also shares the r6-touched pagerank file
-    # (additive checkpoint_dir param, default path unchanged) but has an
-    # r05 row and no head slot left; it stays covered by the full local
-    # gate. Everything displaced stays covered by the local full gate
-    # (tools/verify_local.py runs all 249 with the identical oracle
-    # mechanism).
-    # -- re-proofs: code changed in r5/r6 after last driver row
-    "ml_naive_bayes_source",  # r6: integer-lp scoring + min_by argmax
-    "dedup_shingle_containment",  # r6: df-count-before-collect guard
-    "graph_pagerank_purchases",  # r5 eager pins + r6 checkpoint_dir
-    "graph_triangle_suppliers",  # r5 eager edge pin
-    "scd2_user_state_history",  # r6 tie-break fix (ts, event_id)
-    "dedup_near_dup_clusters",  # r5 CC edge pin
-    "dedup_minhash_lsh_pairs",  # r5 let-bound shingle pipeline
-    "dedup_ngram_jaccard",  # r5 let-bound shingle pipeline
-    "emb_quantize_int8",  # r5 quantize rewrite
-    "sim_int8_topk",  # r5 int8 norm rewrite
-    "sim_cosine_topk",  # r5 cosine rewrite
-    "er_blocked_name_linkage",  # r5 F.get ANSI fix
-    "corpus_mixture_weights",  # r5 exact integer div
-    "supplier_revenue_gini",  # r5 DECIMAL accumulation
-    # -- the 36 never-sampled backlog, registry order (exhausts it)
-    "agg_approx_stats",
-    "agg_percentiles",
-    "agg_corr_stats",
-    "agg_collect_sorted",
-    "window_running_revenue",
-    "window_lag_delta",
-    "window_dense_rank_parts",
-    "explode_token_topk",
-    "text_shingles_3gram",
-    "scalar_levenshtein",
-    "scalar_date_arithmetic",
-    "array_set_ops",
-    "events_daily_active",
-    "sql_passthrough_agg",
-    "events_value_histogram",
-    "window_percentile_standing",
-    "agg_mode_event_type",
-    "unpivot_price_components",
-    "text_boilerplate_fraction",
-    "events_audience_overlap",
-    "docs_topk_per_source",
-    "events_percent_change_daily",
-    "agg_bitwise_masks",
-    "events_hour_profile",
-    "customer_segment_mix",
-    "orders_size_distribution",
-    "lineitem_ship_latency",
-    "agg_filtered_counts",
-    "part_name_parse",
-    "customer_balance_outliers",
-    "orders_cohort_ltv",
-    "events_repeat_runs",
-    "supplier_part_coverage",
-    "orders_daily_trend",
-    "events_chi2_type_weekday",
-    "text_kwic_contexts",
-]
-
-_ROUND5_HEAD = [
-    # round-5 head, kept for the rotation ledger (these 50 all went
-    # driver-green in CORRECTNESS_r05.json)
-    # Policy (round-4 verdict item 2): registry growth is FROZEN; the
-    # head leads with the two queries whose code (and for containment,
-    # oracle) changed this round, then 48 queries the driver has NEVER
-    # sampled (r4 cumulative: 165/249; the 36 left over are listed in
-    # tools/next_head.py and exhaust the backlog next round). Everything
-    # displaced stays covered by the local full gate
-    # (tools/verify_local.py runs all 249 with the identical oracle
-    # mechanism).
-    # -- changed this round: hot-shingle df cap (max_df=256, oracle
-    #    mirrored) — the round-4 verdict's "What's wrong #1"
-    "dedup_shingle_containment",
-    # -- changed family: stateful machinery rewrite (threshold_alerts
-    #    schema now derived from key_col); running_totals shares
-    #    applyInPandasWithState plumbing and its last row predates r4
-    "stream_stateful_running_totals",
-    # -- TPC-H tail: never driver-sampled
-    "q4_order_priority",
-    "q11_important_parts",
-    "q12_priority_by_flag",
-    "q13_order_distribution",
-    "q14_promo_share",
-    "q15_top_supplier",
-    "q16_supplier_part_counts",
-    "q17_small_quantity_revenue",
-    "q19_banded_revenue",
-    "q20_excess_shippers",
-    "q22_idle_balances",
-    # -- experimentation family: never driver-sampled
-    "events_conversion_wilson",
-    "orders_cuped_theta",
-    "events_srm_check",
-    "orders_ab_welch_ttest",
-    # -- nonparametric / classical statistics family: never sampled
-    "lineitem_anova_returnflag",
-    "stats_mann_whitney_status",
-    "stats_kruskal_wallis_returnflag",
-    "stats_ks_two_sample",
-    "stats_spearman_qty_price",
-    # -- streaming + graph stragglers: never sampled
-    "stream_dedup_watermark",
-    "graph_pagerank_dangling",
-    # -- as-of join variants (j9 carried the family in r4)
-    "j10_asof_tolerance_1h",
-    "j11_asof_nearest_purchase",
-    # -- bench headliners without driver rows
-    "doc_pack_contexts",
-    "events_time_bucket_rollup",
-    "text_shingle_novelty",
-    # -- never-sampled backlog, diverse operator classes
-    "window_time_range_moving_avg",
-    "skew_salted_type_counts",
-    "j7_full_outer_counts",
-    "j8_cross_join_grid",
-    "sample_hash_mod",
-    "sample_stratified_hash",
-    "sample_fixed_quota_per_source",
-    "dedup_canonical_selection",
-    "corpus_dedup_rate_by_source",
-    "corpus_profile",
-    "text_langid_confusion",
-    "text_type_token_ratio",
-    "text_bigram_logprob",
-    "emb_vector_stats",
-    "emb_hard_negatives",
-    "emb_label_centroid_distances",
-    "emb_dim_variance",
-    "ml_split_leakage_audit",
-    "events_retention_matrix",
-    "events_stickiness_weekly",
-    "supplier_concentration_hhi",
-]
-
-_ROUND4_HEAD = [
-    # round-4 head, kept for the rotation ledger (these 50 all went
-    # driver-green in CORRECTNESS_r04.json)
-    "text_inverted_index",
-    # -- newest additions with no driver evidence yet: late ext3 batch
-    #    (purity/survival/Benford) + the ext4 batch (BM25, count-min,
-    #    Adamic-Adar, gap-fill, winsorized, DQ report, k-NN label audit)
-    "emb_cluster_purity",
-    "orders_repurchase_survival",
-    "orders_benford_audit",
-    "text_bm25_scores",
-    "agg_countmin_audit",
-    "graph_adamic_adar_suppliers",
-    "events_resample_gapfill",
-    "stats_winsorized_prices",
-    "dq_constraint_report",
-    "emb_knn_label_audit",
-    # -- round-4 second batch (temporal joins, repetition signals,
-    #    reservoir sampling, streaming asof/near-dup, SCD2/MERGE,
-    #    triangles, PMI, word-boundary Aho-Corasick) — first evidence
-    "f3_keyword_word_5k",
-    "j9_asof_view_purchase",
-    # (j10/j11 as-of variants: verified by the local gate; j9 carries the
-    # family's driver evidence this round — variants rotate next round)
-    "events_coactivity_histogram",
-    "text_repetition_signals",
-    "events_decayed_activity",
-    "sample_weighted_reservoir",
-    "stream_asof_enrich_purchases",
-    "stream_neardup_filter",
-    "scd2_user_state_history",
-    "lake_merge_upsert",
-    "graph_triangle_suppliers",
-    "text_pmi_bigrams",
-    # -- round-4 first batch — first evidence
-    "f2_keyword_substring_5k",
-    "graph_pagerank_iters12",
     "emb_lloyd_centroids",
-    # -- never driver-sampled backlog (r1-r3 era); the rest of the
-    #    91-query never-sampled set (tools/next_head.py) rotates in
-    #    next round
-    # -- round-4 sixth batch: reconciliation, URL scalars, mixture plan
-    "dq_reconciliation_orders",
-    "scalar_url_components",
-    "corpus_mixture_weights",
-    # -- round-4 fourth batch (queries_ext5 tail): truncation-recall
-    #    audit, Markov stationary distribution, k-hop BFS, forecast
-    #    backtest, Gini concentration
+    "emb_pca_top_component",
+    "emb_pq_recall",
+    "emb_pq_topk",
+    "emb_quantize_int8",
     "emb_truncation_recall",
-    "events_markov_stationary",
-    "graph_bfs_reachability",
-    "orders_forecast_backtest",
-    "supplier_revenue_gini",
-    # -- round-4 third batch (queries_ext5): newest novel operator
-    #    families — first driver evidence (the displaced backlog
-    #    entries rotate back next round)
-    "events_autocorrelation",
-    "events_seasonal_anomaly",
-    "stats_theil_sen_trend",
-    "ml_naive_bayes_source",
-    "er_blocked_name_linkage",
-    "text_feature_hashing",
-    "dedup_shingle_containment",
-    "graph_kcore_suppliers",
-    "part_price_skyline",
-    "events_trigram_paths",
-    "sample_rendezvous_shards",
-    "ml_drift_psi",
-    # -- stateful streaming alerting (newest)
-    "stream_threshold_alerts",
-    # -- ext4 second batch — first evidence (displaces three backlog
-    #    entries that rotate next round)
-    "text_rrf_fusion",
-    "join_bloom_filter_audit",
-    "lineitem_abc_pareto",
+    "emb_vector_stats",
+    "er_phonetic_block_audit",
+    "events_decayed_activity",
+    "events_nonfinite_audit",
+    "graph_pagerank_purchases",
+    "multimodal_frame_sample",
+    "sample_fixed_quota_per_source",
+    "sim_ann_recall",
+    "sim_cosine_topk",
+    "sim_int8_topk",
+    "sim_ivf_lloyd_recall",
+    "sim_ivf_lloyd_topk",
+    "sim_ivf_recall",
+    "sim_ivf_topk",
+    "sim_lsh_topk",
+    "sim_retrieval_mrr",
+    "text_kwic_contexts",
+    "text_language_id",
+    "a2_dedup_keep_first",
+    "a3_keep_latest",
+    "a4_distinct_dim",
+    "a6_max_watermark",
+    "agg_distinct_stats",
+    "agg_having_big_customers",
+    "agg_pricing_summary",
+    "corpus_decontaminate",
+    "dedup_fingerprint",
+    "dedup_simhash",
 ]

@@ -17,6 +17,15 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half the host's physical memory, in whole GiB (at least 1g): the
+    JVM heap must leave room for off-heap buffers, Python workers and
+    the OS. A fixed 48g default on a 15 GB host let the heap grow until
+    the kernel's OOM killer took the JVM mid-suite."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, total // 2**31)}g"
+
+
 def get_spark(
     app_name: str = "social_and_media_data_ingestion_spark",
     master: str | None = None,
@@ -36,7 +45,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Let the planner pick shuffled-hash over sort-merge when its

@@ -8,9 +8,11 @@ hash (ast.unparse normalizes them away).
 """
 
 import ast
+import os
 import sys
 
-sys.path.insert(0, "/root/repo/tools")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(ROOT, "tools"))
 
 import stale_rows as S
 
