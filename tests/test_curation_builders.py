@@ -22,13 +22,22 @@ from social_and_media_data_ingestion_spark.operators.dedup import (
 )
 from social_and_media_data_ingestion_spark.operators.graph import triangle_count
 
-SF = "/root/testdata/sf0.001"
 
-# (build jobs, execution jobs) upper bounds per query on the sf0.001
-# fixture, measured with shuffle_partitions=8 (the suite's session).
-# Before the one-lineage rewrite the same fixture measured
-# corpus_full_curation (39, 13), dedup_shingle_containment (5, 4) and
-# graph_triangle_suppliers (18, 1).
+@pytest.fixture(scope="module")
+def tables(tmp_path_factory) -> str:
+    """The curation benchmark's seeded tables (sf 0.01, 500 documents)."""
+    from perfbench import gen
+
+    out = str(tmp_path_factory.mktemp("curation_tables"))
+    gen.registry_tables(out, seed=1, sf=0.01, n_docs=500, n_emb=500)
+    return out
+
+
+# (build jobs, execution jobs) upper bounds per query on `tables`,
+# measured with shuffle_partitions=8 (the suite's session). Before the
+# one-lineage rewrite the same fixture measured corpus_full_curation
+# (39, 13), dedup_shingle_containment (5, 4) and
+# graph_triangle_suppliers (19, 1).
 _JOB_BOUNDS = {
     "corpus_full_curation": (19, 7),
     "dedup_shingle_containment": (5, 4),
@@ -41,7 +50,7 @@ def _jobs_in(sc, group: str) -> int:
 
 
 @pytest.mark.parametrize("name", sorted(_JOB_BOUNDS))
-def test_curation_builders_job_counts(spark, name):
+def test_curation_builders_job_counts(spark, tables, name):
     """Build-time and execution jobs of each curation headliner stay
     under the bounds. The first call warms the session-level state the
     count depends on (the exact-dedup cache entry); the second is
@@ -54,7 +63,7 @@ def test_curation_builders_job_counts(spark, name):
         for rep in range(2):
             tag = f"jobguard-{name}-{rep}-{time.monotonic_ns()}"
             sc.setJobGroup(f"{tag}-build", "build")
-            df = q.spark(spark, SF)
+            df = q.spark(spark, tables)
             sc.setJobGroup(f"{tag}-exec", "exec")
             df.write.format("noop").mode("overwrite").save()
         got = (_jobs_in(sc, f"{tag}-build"), _jobs_in(sc, f"{tag}-exec"))
@@ -247,7 +256,7 @@ def _persistent_rdds(sc) -> int:
     return sc._jsc.getPersistentRDDs().size()
 
 
-def test_curation_pipeline_pins_are_reclaimed(spark):
+def test_curation_pipeline_pins_are_reclaimed(spark, tables):
     """Repeated persist=True pipeline runs must not accumulate pinned
     RDDs. The near-dedup stage's plan scans the connected-components
     pin, which is new on every call, so caching it added one cache
@@ -262,7 +271,7 @@ def test_curation_pipeline_pins_are_reclaimed(spark):
     from social_and_media_data_ingestion_spark.plans.tables import t
 
     sc = spark.sparkContext
-    docs = t(spark, SF, "documents")
+    docs = t(spark, tables, "documents")
 
     def run_once() -> None:
         stages = pretraining_corpus_pipeline(
