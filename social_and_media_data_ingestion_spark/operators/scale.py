@@ -577,9 +577,7 @@ def global_running_min(
     for row in minima:
         if acc is not None:
             offsets[row[pid]] = acc
-        m = row["m"]
-        if m is not None and (acc is None or m < acc):
-            acc = m
+        acc = _min2(acc, row["m"])
     in_dt = df.schema[value_col].dataType
     base_fields = [f for f in ranged.schema.fields if f.name != pid]
     out_schema = T.StructType(base_fields + [T.StructField(out_col, in_dt)])

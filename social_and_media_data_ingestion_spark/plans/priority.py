@@ -19,10 +19,12 @@ from __future__ import annotations
 # runs every registry query with the identical oracle mechanism).
 PRIORITY_HEAD = [
     # Composition, in rotation-policy order:
-    #   1. every query the staleness ledger marks stale (8): the
+    #   1. every query the staleness ledger marks stale (9): the
     #      closures of connected_components (one edge pin, observed
     #      convergence), the candidate-restricted ngram_jaccard_pairs
-    #      verify and the one-plan triangle_count changed;
+    #      verify and the one-plan triangle_count changed, and
+    #      global_running_min's NaN-safe partition prefix
+    #      (part_price_skyline);
     #   2. fill to 50 with the oldest-evidence re-proofs (newest
     #      green driver row in r7, then r8; ledger order).
     "dedup_minhash_calibration",
@@ -33,6 +35,7 @@ PRIORITY_HEAD = [
     "dedup_ngram_jaccard",
     "er_entity_clusters",
     "er_resolution_pipeline",
+    "part_price_skyline",
     "dedup_embedding_cosine",
     "dedup_minhash_signatures",
     "emb_cluster_purity",
@@ -74,5 +77,4 @@ PRIORITY_HEAD = [
     "agg_pricing_summary",
     "corpus_decontaminate",
     "dedup_fingerprint",
-    "dedup_simhash",
 ]

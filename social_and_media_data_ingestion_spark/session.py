@@ -4,8 +4,9 @@ Single place for engine-wide configuration: AQE on (runtime coalesce +
 skew-join handling), Arrow on (every pandas-UDF boundary is batched),
 UTC session timezone (oracle comparisons are TZ-naive UTC).
 
-Scale notes: `spark.sql.shuffle.partitions` defaults to the local core
-count here; on a real cluster it should be ~2-3x total cores or left to
+Scale notes: the local master and `spark.sql.shuffle.partitions` default
+to the CPUs this process may run on (`SPARK_GRAFT_CPUS` overrides); on a
+real cluster the partition count should be ~2-3x total cores or left to
 AQE's coalescing with a high initial value. Nothing in the engine
 assumes a partition count.
 """
@@ -32,7 +33,7 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(cpus)
 

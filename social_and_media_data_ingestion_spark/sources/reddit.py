@@ -5,14 +5,18 @@ reddit_subm_extraction.py, reddit_comm_extraction.py) as a declarative
 Spark plan:
 
     zst-NDJSON scan (JVM codec, PERMISSIVE + corrupt-record column)
-      -> validity split (bad JSON, unparseable created_utc)
-      -> broadcast left-semi join on lowered subreddit allowlist
-      -> substring keyword any-match on text fields
-      -> fixed-field projection with ""-defaults
+      -> validity split (bad JSON, unparseable created_utc): one filter
+         per side over the same scan
+      -> matched: broadcast left-semi join on lowered subreddit allowlist
+         -> substring keyword any-match on text fields
+         -> fixed-field projection with ""-defaults
+      -> bad: the raw line, or the parsed fields re-serialized as JSON
       -> observe() counters (total / bad / matched — ref's :71,95 metrics)
 
-The whole plan is map-only + one broadcast: shuffle-free, so it scales
-linearly with input files. `.zst` is non-splittable (1 task/file) — the
+Each output side reads the input once (one FileScan, no Union), so an
+NDJSON line is decompressed and parsed once per side. The whole plan
+is map-only + one broadcast: shuffle-free, so it scales linearly with
+input files. `.zst` is non-splittable (1 task/file) — the
 reference had the identical parallelism model (1 process/file); for
 100 TB landings call io.landing_to_parquet first.
 """
@@ -24,14 +28,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pyspark.sql import types as T
-
-from social_and_media_data_ingestion_spark.io import (
-    landing_to_parquet,
-    read_ndjson,
-    split_corrupt,
-)
-from social_and_media_data_ingestion_spark.schemas import CORRUPT_COL
+from social_and_media_data_ingestion_spark.io import landing_to_parquet, read_ndjson
 from social_and_media_data_ingestion_spark.operators.filters import (
     isin_lowered,
     semi_join_lowered,
@@ -43,6 +40,7 @@ from social_and_media_data_ingestion_spark.operators.projections import (
     project_fields_defaulted,
 )
 from social_and_media_data_ingestion_spark.schemas import (
+    CORRUPT_COL,
     REDDIT_COMMENT,
     REDDIT_COMMENT_FIELDS,
     REDDIT_SUBMISSION,
@@ -89,26 +87,25 @@ def _extract(
     if landing_dir is not None:
         good_path, bad_path = f"{landing_dir}/good", f"{landing_dir}/bad"
         landing_to_parquet(spark, input_path, schema, good_path, bad_dst=bad_path)
-        good_schema = T.StructType(
-            [f for f in schema.fields if f.name != CORRUPT_COL]
-        )
-        good = spark.read.schema(good_schema).parquet(good_path)
-        bad = spark.read.schema(schema).parquet(bad_path)
+        # good/ has no corrupt column: its rows read it as NULL
+        raw = spark.read.schema(schema).parquet(good_path, bad_path)
     else:
         raw = read_ndjson(spark, input_path, schema)
-        good, bad = split_corrupt(raw)
+    cols = [c for c in raw.columns if c != CORRUPT_COL]
     # created_utc must parse as an integer; rows where it doesn't are bad
     # (same skip semantics as the reference's int() + except path).
     has_ts = F.col("created_utc").try_cast("long").isNotNull()
-    bad_ts = good.filter(~has_ts).withColumn(
-        "_corrupt_record", F.to_json(F.struct(*good.columns))
+    corrupt = F.col(CORRUPT_COL)
+    valid = raw.filter(corrupt.isNull() & has_ts).select(*cols)
+    # one filter over the same scan: corrupt JSON keeps its raw line,
+    # an unusable created_utc is serialized from the parsed fields
+    bad = raw.filter(corrupt.isNotNull() | ~has_ts).select(
+        *cols, F.coalesce(corrupt, F.to_json(F.struct(*cols))).alias(CORRUPT_COL)
     )
-    valid = good.filter(has_ts)
     matched = _apply_allowlist(valid, subreddit_col, allowlist).filter(
         auto_contains_any(text_cols, list(keywords))
     )
-    projected = project_fields_defaulted(matched, fields)
-    return projected, bad.select(*bad_ts.columns).unionByName(bad_ts)
+    return project_fields_defaulted(matched, fields), bad
 
 
 def extract_submissions(
@@ -162,8 +159,6 @@ def with_scan_metrics(df: DataFrame, observation) -> DataFrame:
     `observation` is a pyspark.sql.Observation; after an action,
     `observation.get` returns the counts. Replaces the reference's
     every-100k-lines progress counters with zero-cost accumulators."""
-    from social_and_media_data_ingestion_spark.schemas import CORRUPT_COL
-
     cols = [F.count(F.lit(1)).alias("n_total")]
     if CORRUPT_COL in df.columns:
         cols.append(

@@ -6,6 +6,11 @@ explode-projections — multi-output, no Python loop:
     page json -> tweets  (time, id, author_id, text, ref_type, ref_id)
               -> users   (id, username)  [last-wins dedup downstream]
 
+Each page is parsed JVM-side, once per output: the page string is a
+literal in a one-row plan, not a Python RDD, and the page's
+high-watermark (max tweet time) is an Observation on the tweets write,
+so a page costs two Spark jobs (tweets append, users append).
+
 Ingestion (ref tweet_download.py:62-104) is a driver-side micro-batch
 loop over `next_token` cursors with a file checkpoint — the Structured
 Streaming-shaped replacement for the reference's while-loop, with
@@ -20,7 +25,7 @@ import os
 import time as _time
 from collections.abc import Callable, Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from social_and_media_data_ingestion_spark.operators.projections import (
@@ -30,9 +35,16 @@ from social_and_media_data_ingestion_spark.schemas import TWEET_PAGE
 
 
 def parse_pages(spark: SparkSession, pages: list[str]) -> DataFrame:
-    """One row per raw page-JSON string."""
-    return spark.createDataFrame([(p,) for p in pages], ["raw"]).select(
-        F.from_json("raw", TWEET_PAGE).alias("page")
+    """One row per raw page-JSON string, in input order.
+
+    The pages are literals exploded from a one-row range, so the frame
+    is built in the JVM: every action over it re-runs a local scan, not
+    a Python RDD that re-ships and re-parses the page per partition."""
+    raw = F.array(*[F.lit(p) for p in pages]).cast("array<string>")
+    return (
+        spark.range(0, 1, 1, 1)
+        .select(F.explode(raw).alias("raw"))
+        .select(F.from_json("raw", TWEET_PAGE).alias("page"))
     )
 
 
@@ -142,9 +154,13 @@ def ingest_cursor_paginated(
             return
         pdf = parse_pages(spark, [json.dumps(page)])
         tweets, users = flatten_page(pdf)
-        tweets.write.mode("append").parquet(f"{out_dir}/tweets")
+        # the watermark is observed on the tweets write: no extra job
+        obs = Observation("tweet_page")
+        tweets.observe(obs, F.max("time").cast("string").alias("wm")).write.mode(
+            "append"
+        ).parquet(f"{out_dir}/tweets")
         users.write.mode("append").parquet(f"{out_dir}/users")
-        watermark = tweets.agg(F.max("time").cast("string")).collect()[0][0]
+        watermark = obs.get["wm"]
         token = (page.get("meta") or {}).get("next_token")
         if token is not None and token in seen_tokens:
             # wedged cursor: this page is appended, but following its

@@ -373,3 +373,30 @@ def test_running_min_decimal_and_string_types(spark):
             dfs, ["id"], "v", out_col="m", num_partitions=8
         ).collect()
     } == {r.id: r.m for r in dfs.withColumn("m", F.min("v").over(w)).collect()}
+
+
+def test_running_min_all_nan_first_partition(spark):
+    """A leading range partition that is all NaN must not freeze the
+    predecessor-partition prefix at NaN: NaN sorts above every value,
+    so the first non-NaN partition's minimum replaces it."""
+    from social_and_media_data_ingestion_spark.operators.scale import (
+        global_running_min,
+    )
+
+    rows = [(i, float("nan") if i < 200 else float(i)) for i in range(400)]
+    df = spark.createDataFrame(rows, "id bigint, v double")
+    w = Window.orderBy("id").rowsBetween(Window.unboundedPreceding, 0)
+    want = {
+        r.id: r.m for r in df.withColumn("m", F.min("v").over(w)).collect()
+    }
+    got = {
+        r.id: r.m
+        for r in global_running_min(
+            df, ["id"], "v", out_col="m", num_partitions=4
+        ).collect()
+    }
+    assert set(got) == set(want)
+    for k in want:
+        g, x = got[k], want[k]
+        assert g == x or (g != g and x != x), (k, g, x)
+    assert got[399] == 200.0
