@@ -468,6 +468,13 @@ def connected_components(
     exhausted first, a warning is logged and the (possibly split) labels
     are returned — raise max_iter for graphs of diameter > max_iter.
 
+    NULL endpoints: an edge whose `src` or `dst` is NULL is dropped at
+    entry (a map-side filter before the pin). A NULL is not a node: kept,
+    it would come out as an `id` of NULL carrying a real label, and
+    `label != old` is NULL for it, so the convergence count could never
+    see it move. A node whose only edges have a NULL other end is
+    therefore absent from the output, like a node with no edges.
+
     Round shape: the caller's edges are pinned ONCE, then each round
     pins ONE label frame. Round 1 is a bare `groupBy(s)` of `least(s, min(t))` over the
     doubled edges — every label starts as its own id, so it needs no
@@ -535,7 +542,11 @@ def connected_components(
     # ran it once per union branch (25 jobs and 2.2 s of
     # corpus_full_curation's 3.7 s build on the 500-document curation
     # benchmark fixture).
-    pinned = _truncate(edges.select(_id(src).alias("s"), _id(dst).alias("t")))
+    pinned = _truncate(
+        edges.select(_id(src).alias("s"), _id(dst).alias("t")).where(
+            F.col("s").isNotNull() & F.col("t").isNotNull()
+        )
+    )
     # the doubled edge set is a map-side union over the pinned blocks:
     # no shuffle, and no dedup needed (a duplicate edge only feeds the
     # same value to min() twice)

@@ -412,7 +412,12 @@ def _centroid_sim_structs(vec_col: str, cents: list[tuple[int, list[float]]]):
     typed empty array — array() alone is VOID-typed and every
     downstream array_max(...).getField would fail analysis (r7
     empty-tables probe); with the struct type pinned, array_max yields
-    a typed NULL and sort/slice/explode yield no rows."""
+    a typed NULL and sort/slice/explode yield no rows.
+
+    A norm product that is zero (a zero-norm vector, or two norms whose
+    product underflows) gives a NULL `cs` via try_divide, not an ANSI
+    divide-by-zero; NULL sorts below every similarity, as the oracle's
+    NULL (DuckDB's x / 0) does under ORDER BY ... DESC."""
     if not cents:
         return F.expr(
             "CAST(array() AS ARRAY<STRUCT<cs: DOUBLE, neg_cid: INT>>)"
@@ -421,7 +426,7 @@ def _centroid_sim_structs(vec_col: str, cents: list[tuple[int, list[float]]]):
     vq = _qident(vec_col)
     for cid, cv in cents:
         arr = _sql_arr(cv)
-        cs = f"{_sql_dot(vq, arr)} / ({_sql_norm(vq)} * {_sql_norm(arr)})"
+        cs = f"try_divide({_sql_dot(vq, arr)}, {_sql_norm(vq)} * {_sql_norm(arr)})"
         entries.append(f"named_struct('cs', {cs}, 'neg_cid', {-int(cid)})")
     return F.expr("array(" + ",".join(entries) + ")")
 
@@ -430,6 +435,13 @@ def _nearest_centroid_expr(vec_col: str, cents: list[tuple[int, list[float]]]):
     """centroid_id of the max-cosine centroid (id tie-break) — map-only."""
     best = F.array_max(_centroid_sim_structs(vec_col, cents))
     return -best.getField("neg_cid")
+
+
+def _has_norm(vec: list[float]) -> bool:
+    """True when some component squares to a positive double (NaN counts,
+    as DuckDB orders NaN above 0): the vector's norm is then nonzero.
+    The oracle's twin is `len(list_filter(ce, x -> x * x > 0)) > 0`."""
+    return any(x is not None and not x * x <= 0 for x in vec)
 
 
 def lloyd_centroids(
@@ -449,7 +461,10 @@ def lloyd_centroids(
     decimals so the refined centroids are cross-engine reproducible
     (float summation order differs between engines; 1e-6 rounding
     absorbs it). Clusters that lose all members drop out — their id
-    simply stops appearing (spherical k-means convention).
+    simply stops appearing (spherical k-means convention). Zero-norm
+    seeds and updated centroids that round to all zeros (a cluster of
+    denormal vectors) drop out too: every cosine against them would
+    divide by a zero norm.
 
     Scale: per round, assignment is MAP-ONLY (the k current centroids are
     bounded driver state embedded as plan literals — no corpus x k
@@ -465,11 +480,15 @@ def lloyd_centroids(
         )
         .collect()
     )
-    cents = [(int(r.centroid_id), list(r.cent_vec)) for r in seed_rows]
-    if not cents:  # empty corpus -> no centroids (r7 empty-tables probe)
-        return []
+    cents = [
+        (int(r.centroid_id), list(r.cent_vec))
+        for r in seed_rows
+        if _has_norm(r.cent_vec)
+    ]
     vecs = corpus.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v"))
     for _ in range(iters):
+        if not cents:  # empty corpus or no nonzero centroid (r7 empty-tables probe)
+            return []
         assigned = vecs.select(
             _nearest_centroid_expr("v", cents).alias("centroid_id"), "v"
         )
@@ -484,10 +503,11 @@ def lloyd_centroids(
                 F.transform("sm", lambda s: s.getField("mx")).alias("cent_vec"),
             )
         )
-        cents = [
-            (int(r.centroid_id), list(r.cent_vec)) for r in cent_df.collect()
-        ]
-        cents.sort()
+        cents = sorted(
+            (int(r.centroid_id), list(r.cent_vec))
+            for r in cent_df.collect()
+            if _has_norm(r.cent_vec)
+        )
     return cents
 
 
@@ -559,7 +579,9 @@ def ivf_topk(
         .select(
             "query_id",
             "neighbor_id",
-            (_dot("q_vec", "c_vec") / (_norm("q_vec") * _norm("c_vec"))).alias("cosine"),
+            F.try_divide(
+                _dot("q_vec", "c_vec"), _norm("q_vec") * _norm("c_vec")
+            ).alias("cosine"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))

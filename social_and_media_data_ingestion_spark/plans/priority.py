@@ -19,12 +19,17 @@ from __future__ import annotations
 # runs every registry query with the identical oracle mechanism).
 PRIORITY_HEAD = [
     # Composition, in rotation-policy order:
-    #   1. every query the staleness ledger marks stale (9): the
-    #      closures of connected_components (one edge pin, observed
-    #      convergence), the candidate-restricted ngram_jaccard_pairs
-    #      verify and the one-plan triangle_count changed, and
-    #      global_running_min's NaN-safe partition prefix
-    #      (part_price_skyline);
+    #   1. every query the staleness ledger marks stale (16), plus
+    #      sim_ivf_lloyd_recall and sim_ivf_recall, which compose the
+    #      changed IVF queries through `_REG_BASE` lookups the ledger
+    #      does not trace: the closures of
+    #      connected_components (one edge pin, observed convergence,
+    #      NULL endpoints dropped), the candidate-restricted
+    #      ngram_jaccard_pairs verify and the one-plan triangle_count
+    #      changed, global_running_min's NaN-safe partition prefix
+    #      (part_price_skyline), and the centroid cosine (try_divide on a
+    #      zero norm product) with the Lloyd seeds/updates that drop
+    #      zero-norm centroids (the IVF, k-means and Lloyd queries);
     #   2. fill to 50 with the oldest-evidence re-proofs (newest
     #      green driver row in r7, then r8; ledger order).
     "dedup_minhash_calibration",
@@ -36,15 +41,20 @@ PRIORITY_HEAD = [
     "er_entity_clusters",
     "er_resolution_pipeline",
     "part_price_skyline",
+    "emb_lloyd_centroids",
+    "sim_ivf_lloyd_topk",
+    "sim_ivf_lloyd_recall",
+    "sim_ivf_topk",
+    "sim_ivf_recall",
+    "emb_kmeans_assign",
+    "emb_kmeans_update",
+    "emb_cluster_purity",
+    "sim_retrieval_mrr",
     "dedup_embedding_cosine",
     "dedup_minhash_signatures",
-    "emb_cluster_purity",
     "emb_dim_audit",
     "emb_dim_variance",
     "emb_hard_negatives",
-    "emb_kmeans_assign",
-    "emb_kmeans_update",
-    "emb_lloyd_centroids",
     "emb_pca_top_component",
     "emb_pq_recall",
     "emb_pq_topk",
@@ -60,12 +70,7 @@ PRIORITY_HEAD = [
     "sim_ann_recall",
     "sim_cosine_topk",
     "sim_int8_topk",
-    "sim_ivf_lloyd_recall",
-    "sim_ivf_lloyd_topk",
-    "sim_ivf_recall",
-    "sim_ivf_topk",
     "sim_lsh_topk",
-    "sim_retrieval_mrr",
     "text_kwic_contexts",
     "text_language_id",
     "a2_dedup_keep_first",

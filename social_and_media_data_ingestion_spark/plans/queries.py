@@ -1667,13 +1667,16 @@ _LLOYD_ITERS = 2
 def _lloyd_cte_sql(n_centroids: int, iters: int) -> str:
     """DuckDB CTE chain cent0 -> (a0, cent1) -> ... mirroring
     similarity.lloyd_centroids exactly (argmax assign with centroid-id
-    tie-break; element-wise mean rounded to 6dp)."""
+    tie-break; element-wise mean rounded to 6dp; zero-norm seeds and
+    all-zero updated centroids dropped, the twin of `_has_norm`)."""
+    nonzero = "len(list_filter(ce, x -> x * x > 0)) > 0"
     # valid_embeddings: the composing oracles all define the
     # valid-vector CTE at their WITH head (plans/tables.vectors twin)
     parts = [
-        f"cent0 AS (SELECT vec_id AS centroid_id, "
+        f"cent0 AS (SELECT * FROM (SELECT vec_id AS centroid_id, "
         f"list_transform(embedding, x -> x::DOUBLE) AS ce "
-        f"FROM valid_embeddings ORDER BY vec_id LIMIT {n_centroids})"
+        f"FROM valid_embeddings ORDER BY vec_id LIMIT {n_centroids}) "
+        f"WHERE {nonzero})"
     ]
     for r in range(iters):
         parts.append(
@@ -1689,13 +1692,15 @@ def _lloyd_cte_sql(n_centroids: int, iters: int) -> str:
         )
         parts.append(
             f"""cent{r + 1} AS (
-      SELECT centroid_id, list(v ORDER BY j) AS ce FROM (
-        SELECT centroid_id, j, round(avg(val), 6) AS v FROM (
-          SELECT centroid_id, unnest(embedding)::DOUBLE AS val,
-                 generate_subscripts(embedding, 1) AS j
-          FROM a{r}
-        ) GROUP BY 1, 2
-      ) GROUP BY 1
+      SELECT * FROM (
+        SELECT centroid_id, list(v ORDER BY j) AS ce FROM (
+          SELECT centroid_id, j, round(avg(val), 6) AS v FROM (
+            SELECT centroid_id, unnest(embedding)::DOUBLE AS val,
+                   generate_subscripts(embedding, 1) AS j
+            FROM a{r}
+          ) GROUP BY 1, 2
+        ) GROUP BY 1
+      ) WHERE {nonzero}
     )"""
         )
     return ",\n    ".join(parts)

@@ -9,6 +9,17 @@ to the CPUs this process may run on (`SPARK_GRAFT_CPUS` overrides); on a
 real cluster the partition count should be ~2-3x total cores or left to
 AQE's coalescing with a high initial value. Nothing in the engine
 assumes a partition count.
+
+Python workers: Spark starts its Python workers from
+`social_and_media_data_ingestion_spark.pyworker`
+(`spark.python.daemon.module`), which is `pyspark.daemon` except that a
+task's `importlib.invalidate_caches()` no longer re-reads pyspark.zip,
+the py4j zip and the spark-core jar; that re-read cost every Python
+task 0.13-0.36 s on local[4] (see pyworker.py). The daemon and every
+UDF's module imports must resolve from this checkout whatever the
+working directory, so `spark.executorEnv.PYTHONPATH` is the checkout
+root; without it a worker finds the package only through an
+inherited `PYTHONPATH` or `python -m`'s cwd entry.
 """
 
 from __future__ import annotations
@@ -16,6 +27,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_CHECKOUT_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _default_driver_memory() -> str:
@@ -51,6 +64,11 @@ def get_spark(
             os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
         )
         .config("spark.ui.enabled", "false")
+        .config(
+            "spark.python.daemon.module",
+            "social_and_media_data_ingestion_spark.pyworker",
+        )
+        .config("spark.executorEnv.PYTHONPATH", _CHECKOUT_ROOT)
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Let the planner pick shuffled-hash over sort-merge when its
         # size conditions hold (guide §3.1/§9): measured r13 (same-

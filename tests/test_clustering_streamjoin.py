@@ -66,6 +66,25 @@ def test_connected_components_mixed_endpoint_types(spark):
     assert got["3"] == got["b"] == "3"
 
 
+def test_connected_components_drops_null_endpoints(spark):
+    """An edge with a NULL end is dropped before propagation: no NULL id
+    comes out, a NULL never bridges two components, and a node whose
+    only edges have a NULL other end is absent. Numeric and string ids
+    alike."""
+    edges = spark.createDataFrame(
+        [(1, 2), (2, None), (None, 10), (10, 11), (None, None), (7, None)],
+        "id_a bigint, id_b bigint",
+    )
+    got = {r["id"]: r["cluster_id"] for r in connected_components(edges).collect()}
+    assert got == {1: 1, 2: 1, 10: 10, 11: 10}
+    edges = spark.createDataFrame(
+        [("b", "a"), ("a", None), (None, "x"), ("x", "y")],
+        "id_a string, id_b string",
+    )
+    got = {r["id"]: r["cluster_id"] for r in connected_components(edges).collect()}
+    assert got == {"a": "a", "b": "a", "x": "x", "y": "x"}
+
+
 def test_connected_components_nonconvergence_warns(spark):
     """A component with diameter > max_iter must warn instead of silently
     returning split clusters (labels may be wrong — that's the point)."""

@@ -185,6 +185,83 @@ def test_lloyd_centroids_converge_to_cluster_means(spark):
     assert again == cent
 
 
+# seed 0's norm underflows (5e-324 squares to 0); vector 0 then has a NULL
+# cosine to every centroid and joins the smallest id, seed 1, whose only
+# other member is itself: their mean rounds (6dp) to all zeros
+ZERO_NORM_EMB = [
+    (0, [5e-324, 0.0]),
+    (1, [1e-100, 1e-100]),
+    (2, [1.0, 0.0]),
+    (3, [0.0, 1.0]),
+    (4, [0.9, 0.1]),
+    (5, [0.2, 0.8]),
+]
+
+
+def test_lloyd_drops_zero_norm_seeds_and_centroids(spark):
+    """A zero-norm seed and an updated centroid that rounds to all zeros
+    drop out instead of dividing by a zero norm (an ANSI DIVIDE_BY_ZERO
+    under Spark); a zero-norm query gets NULL cosines, not a crash."""
+    from social_and_media_data_ingestion_spark.operators.similarity import (
+        lloyd_centroids,
+    )
+
+    df = spark.createDataFrame(ZERO_NORM_EMB, "vec_id bigint, embedding array<double>")
+    assert [c for c, _ in lloyd_centroids(df, n_centroids=4, iters=1)] == [2, 3]
+    got = ivf_topk(
+        df, df.filter(F.col("vec_id") <= 2), k=2, n_centroids=4, nprobe=2,
+        lloyd_iters=2,
+    ).collect()
+    assert {r.query_id for r in got} == {0, 1, 2}
+    assert all(r.cosine is None for r in got if 0 in (r.query_id, r.neighbor_id))
+
+
+def test_lloyd_registry_queries_match_oracle_on_all_zero_centroid(spark, tmp_path):
+    """The three Lloyd registry queries agree with their DuckDB oracles
+    when a refined centroid rounds to all zeros: seed 0 points along
+    (1, -1) with float32-subnormal components and only its subnormal
+    look-alikes join it, while seeds 1..7 cover the positive quadrant
+    every 15 degrees and take every other vector."""
+    import math
+
+    import duckdb
+
+    from social_and_media_data_ingestion_spark.plans.queries import registry
+
+    def unit(deg, r=1.0):
+        return [r * math.cos(math.radians(deg)), r * math.sin(math.radians(deg))]
+
+    rows = (
+        [(0, [1e-40, -1e-40])]
+        + [(i, unit(15 * (i - 1))) for i in range(1, 8)]
+        + [(i, unit((i * 37) % 90, 1 + i % 3)) for i in range(8, 40)]
+        + [(40, [2e-40, -2e-40]), (41, [1e-40, -3e-40])]
+    )
+    spark.createDataFrame(
+        [(i, v, i % 2) for i, v in rows],
+        "vec_id bigint, embedding array<float>, label int",
+    ).write.parquet(str(tmp_path / "embeddings.parquet"))
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW embeddings AS SELECT * FROM "
+        f"read_parquet('{tmp_path}/embeddings.parquet/*.parquet')"
+    )
+
+    def canon(records):
+        return sorted(
+            tuple("NULL" if v is None or v != v else f"{v:.6f}"
+                  if isinstance(v, float) else str(v) for v in r)
+            for r in records
+        )
+
+    reg = registry()
+    for name in ("emb_lloyd_centroids", "sim_ivf_lloyd_topk", "sim_ivf_lloyd_recall"):
+        sdf = reg[name].spark(spark, str(tmp_path))
+        want = con.execute(reg[name].oracle)
+        cols = [d[0] for d in want.description]
+        assert canon(sdf.select(*cols).collect()) == canon(want.fetchall()), name
+
+
 def test_pq_encode_codebook_members_self_code(spark):
     """Vectors that ARE the codewords must encode to their own code id."""
     from social_and_media_data_ingestion_spark.operators.similarity import (

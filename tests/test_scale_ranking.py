@@ -400,3 +400,36 @@ def test_running_min_all_nan_first_partition(spark):
         g, x = got[k], want[k]
         assert g == x or (g != g and x != x), (k, g, x)
     assert got[399] == 200.0
+
+
+def test_running_min_exclusive_null_free_bigint_multi_batch(spark):
+    """NULL-free bigint input takes the vectorized numpy path on every
+    batch but a partition's first in exclusive mode; with 13-row Arrow
+    batches each partition runs several continuation batches, whose
+    first row must see the previous batch's running min. Values sit
+    past 2**53, so a float round trip would show."""
+    from social_and_media_data_ingestion_spark.operators.scale import (
+        global_running_min,
+    )
+
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "13")
+    try:
+        rows = [
+            (i, 2**62 - ((i * 7919) % 1009) * 2**40 + (i % 5) - 2**61 * (i % 3))
+            for i in range(600)
+        ]
+        df = spark.createDataFrame(rows, "id bigint, v bigint")
+        w = Window.orderBy("id").rowsBetween(Window.unboundedPreceding, -1)
+        want = {
+            r.id: r.m for r in df.withColumn("m", F.min("v").over(w)).collect()
+        }
+        got_df = global_running_min(
+            df, ["id"], "v", out_col="m", num_partitions=4, exclusive=True
+        )
+        assert dict(got_df.dtypes)["m"] == "bigint"
+        got = {r.id: r.m for r in got_df.collect()}
+        assert got == want
+        assert got[0] is None
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
